@@ -2745,6 +2745,73 @@ def test_incremental_dedup_sharded_hot_corpus_content(spark):
     assert got == [12]
 
 
+def _plan_nodes(node):
+    """Every node of an executed plan, walking into AQE query stages."""
+    yield node
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif cls.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    else:
+        ch = node.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    for k in kids:
+        yield from _plan_nodes(k)
+
+
+def _hot_corpus_frames(spark):
+    """A corpus holding one content 500 times (plus 100 others) and a
+    batch with a case/whitespace variant of it, one other corpus doc and
+    two fresh docs."""
+    seen = spark.createDataFrame(
+        [(i, "one hot corpus body") for i in range(500)]
+        + [(1000 + i, f"corpus doc {i}") for i in range(100)],
+        ["doc_id", "text"],
+    )
+    new = spark.createDataFrame(
+        [(1, "One  HOT corpus body"), (2, "corpus doc 7"),
+         (3, "fresh doc a"), (4, "fresh doc b")],
+        ["doc_id", "text"],
+    )
+    return new, seen
+
+
+def test_incremental_dedup_verify_broadcast_is_per_distinct_content(spark):
+    """The exact-verify anti-join broadcasts the hash-matched corpus
+    texts once per distinct content, not once per corpus occurrence:
+    500 copies of the hot body reach the broadcast as one row, so the
+    _VERIFY_BCAST_ROWS gate bounds what is broadcast."""
+    new, seen = _hot_corpus_frames(spark)
+    out = dedup.incremental_dedup(new, seen)
+    assert sorted(r.doc_id for r in out.collect()) == [3, 4]
+    anti = [n for n in _plan_nodes(out._jdf.queryExecution().executedPlan())
+            if n.getClass().getSimpleName() == "BroadcastHashJoinExec"
+            and "LeftAnti" in n.toString()]
+    assert len(anti) == 1
+    bcast = [n for n in _plan_nodes(anti[0].children().apply(1))
+             if n.getClass().getSimpleName() == "BroadcastExchangeExec"][0]
+    # the two matched contents (hot body, "corpus doc 7"), not 501 rows
+    assert bcast.metrics().apply("numOutputRows").value() == 2
+
+
+def test_incremental_dedup_no_broadcast_threshold_keeps_rows(spark):
+    """autoBroadcastJoinThreshold=-1 turns every verify-tail broadcast
+    into a shuffle join (the candidate-digest semi-join included) and
+    keeps exactly the rows the broadcast branch keeps."""
+    new, seen = _hot_corpus_frames(spark)
+    want = sorted(r.doc_id for r in dedup.incremental_dedup(new, seen).collect())
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = dedup.incremental_dedup(new, seen)
+        got = sorted(r.doc_id for r in out.collect())
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert got == want == [3, 4]
+    assert "BroadcastExchange" not in plan and "LeftSemi" in plan, plan
+
+
 def test_estimate_rows_uses_footers_and_overestimates_derived(spark, tmp_path):
     """Bloom sizing estimate: a parquet-backed frame answers from file
     footers (even when filtered — the over-estimate is harmless), and a

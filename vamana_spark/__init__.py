@@ -14,8 +14,14 @@ selection; NumPy kernels enter only through Arrow-batched pandas UDFs
 inherently per-partition imperative (see SURVEY.md §2 R6-R8).
 """
 
+from vamana_spark import _worker
 from vamana_spark.params import VamanaParams
 from vamana_spark.index.vamana import VamanaIndex
 
 __all__ = ["VamanaParams", "VamanaIndex"]
 __version__ = "0.1.0"
+
+# in a PySpark worker, the first task that unpickles one of our UDFs
+# imports this package; every later task of that worker then skips the
+# per-task zip re-read (see _worker)
+_worker.install_in_worker()

@@ -2054,16 +2054,18 @@ def _exact_verify_tail(
     flagged = flagged.localCheckpoint()
     maybe = flagged.where(F.col("_maybe"))
     clear = flagged.where(~F.col("_maybe"))
-    cand_h = maybe.select(F.xxhash64("_n").alias("_h")).distinct()
-    seen_matched = (
-        seen_norm.withColumn("_h", F.xxhash64("_n"))
-        .join(F.broadcast(cand_h), "_h", "left_semi")
-        .select("_n")
-    )
     from vamana_spark.functions.util import bytes_conf
 
     thresh = bytes_conf(
         flagged.sparkSession, "spark.sql.autoBroadcastJoinThreshold", 10 << 20
+    )
+    cand_h = maybe.select(F.xxhash64("_n").alias("_h")).distinct()
+    # threshold -1 disables every broadcast here, the digest one included
+    seen_matched = (
+        seen_norm.withColumn("_h", F.xxhash64("_n"))
+        .join(F.broadcast(cand_h) if thresh >= 0 else cand_h, "_h", "left_semi")
+        .select("_n")
+        .distinct()  # the corpus may hold one content many times
     )
     n_maybe = maybe.count()  # cheap: reads the checkpoint
     if thresh >= 0 and n_maybe <= _VERIFY_BCAST_ROWS:
